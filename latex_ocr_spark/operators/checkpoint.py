@@ -285,14 +285,16 @@ def _materialize_stage(
     out_dir: str,
     stage: str,
     df: DataFrame,
+    t0: float,
     n_tokens_col: str | None = None,
 ) -> dict:
     """Write one corpus-wide stage output and append its lineage row
     (part=-1: corpus-wide, never collides with partition resume). Lineage
     metrics ride the write job via ``observe`` so the output parquet is
-    never re-read."""
+    never re-read. ``t0`` is the ``time.time()`` at which the stage began
+    building ``df``: jobs that run while the frame is built (dedup's
+    connected components) count in the row's ``wall_s``."""
     status, subdir = _STAGE_MARKS[stage]
-    t0 = time.time()
     run_id = uuid.uuid4().hex[:8]
     obs = Observation(f"{status}-{run_id}")
     aggs = [F.count(F.lit(1)).alias("n_docs")]
@@ -321,8 +323,9 @@ def run_curate_stage(
     flattened extraction output → ``out_dir/curated`` (doc_id, text)."""
     from . import text_analysis as TA
 
+    t0 = time.time()
     curated = TA.curate_corpus(_flat_extracted_text(spark, extracted_dir))
-    return _materialize_stage(spark, out_dir, "curate", curated)
+    return _materialize_stage(spark, out_dir, "curate", curated, t0)
 
 
 def run_dedup_stage(spark: SparkSession, out_dir: str) -> dict:
@@ -332,11 +335,12 @@ def run_dedup_stage(spark: SparkSession, out_dir: str) -> dict:
     curation gates, no persist needed."""
     from . import dedup as D
 
+    t0 = time.time()
     curated = spark.read.parquet(os.path.join(out_dir, "curated"))
     survivors = D.dedup_apply(
         curated, D.minhash_lsh_pairs(curated, n=3, threshold=0.5)
     )
-    return _materialize_stage(spark, out_dir, "dedup", survivors)
+    return _materialize_stage(spark, out_dir, "dedup", survivors, t0)
 
 
 def run_budget_stage(spark: SparkSession, out_dir: str) -> dict:
@@ -344,10 +348,11 @@ def run_budget_stage(spark: SparkSession, out_dir: str) -> dict:
     deduped survivors → ``out_dir/budgeted`` (doc_id, text + counts)."""
     from . import text_analysis as TA
 
+    t0 = time.time()
     deduped = spark.read.parquet(os.path.join(out_dir, "deduped"))
     budget = TA.token_count(deduped, keep_text=True)
     return _materialize_stage(
-        spark, out_dir, "budget", budget, n_tokens_col="n_subwords"
+        spark, out_dir, "budget", budget, t0, n_tokens_col="n_subwords"
     )
 
 
@@ -388,6 +393,7 @@ def run_mix_stage(
     the sampled output when budgets or upsample factors apply."""
     from . import text_analysis as TA
 
+    t0 = time.time()
     corpus = spark.read.parquet(os.path.join(out_dir, "budgeted")).select(
         "doc_id", "text"
     )
@@ -427,10 +433,10 @@ def run_mix_stage(
         )
     if budgets or upsample_factors:
         row = _materialize_stage(
-            spark, out_dir, "mix", mixed, n_tokens_col="n_words"
+            spark, out_dir, "mix", mixed, t0, n_tokens_col="n_words"
         )
     else:
-        row = _materialize_stage(spark, out_dir, "mix", mixed)
+        row = _materialize_stage(spark, out_dir, "mix", mixed, t0)
     for frame in cleanup:
         frame.unpersist()
     return row

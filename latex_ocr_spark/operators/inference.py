@@ -1,24 +1,33 @@
 """The bucketed-batch inference operator — the heart of the engine.
 
-Two pandas-UDF stages (and nothing per-row-Python anywhere, north rule):
+One JVM exchange, then one pandas-UDF stage (and nothing per-row-Python
+anywhere, north rule):
 
-  1. ``preprocess_spans`` (mapInPandas): PNG decode → greyscale (P1) → crop
-     (P3) → pad-to-bucket (P4) → downsample (P5); emits the bucket id — the
-     batching/shuffle key (G1, /root/reference/model/utils/data_generator.py:84-122)
-     — plus a salt to split hot buckets (SURVEY.md §7 'Skew').
-  2. ``decode_groups`` (groupBy(bucket, salt).applyInPandas): batches
-     same-shape canvases into dense uint8 tensors (G3 — trivial here because a
-     bucket guarantees one shape) and runs the CNN encoder + attention LSTM
-     decode (M1-M8) with broadcast weights, chunked by a pixel budget so UDF
-     memory is bounded regardless of group size.
+  1. ``decode_key``: the exchange key, computed in the JVM from the media
+     table's stored (height, width) — the first-fit shape bucket (G1, the
+     reference's model/utils/data_generator.py:84-122) — plus a salt,
+     crc32(media_ref) % salt_buckets, that splits hot buckets (SURVEY.md §7
+     'Skew'). It only decides which rows share a partition.
+  2. ``decode_media`` (mapInPandas over the hash-partitioned rows): per
+     Arrow batch, PNG decode → greyscale (P1) → crop (P3) → pad-to-bucket
+     (P4) → downsample (P5), then batches same-shape canvases into dense
+     uint8 tensors (G3) and runs the CNN encoder + attention LSTM decode
+     (M1-M8) with broadcast weights, chunked by a pixel budget so UDF memory
+     is one Arrow batch of canvases plus one chunk of activations.
 
-At cluster scale the repartition on (bucket, salt) is the one unavoidable
-shuffle; its payload is the downsampled uint8 canvas (4× smaller than the
-source PNG raster), and AQE coalesces the small buckets.
+The kernels are batch-invariant, so which rows share a batch never changes
+the output. Each Python task costs a fixed worker set-up on top of its
+kernels, so the stage count, not the kernels, sets the floor on small
+passes: one stage keeps the task count at ``decode_partitions``.
+
+``preprocess_spans`` (prepro alone, keyed by the bucket of the actual
+canvas) feeds the perplexity metric; ``decode_groups``/``decode_rows``
+decode its output through the same per-batch decoder.
 """
 
 from __future__ import annotations
 
+import struct
 import zlib
 
 import numpy as np
@@ -28,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..config import PAD_SIZE, ModelConfig, PipelineConfig
 from ..fixtures.png import decode_png
-from ..fixtures.vocab import ID_END, ID_TO_TOK, N_TOK
+from ..fixtures.vocab import ID_END, ID_TO_TOK
 from ..kernels import image_ops
 from ..kernels.beam import beam_decode
 from ..kernels.decode import AttentionDecoder
@@ -82,45 +91,39 @@ def preprocess_spans(media_joined: DataFrame, pipe: PipelineConfig) -> DataFrame
     return media_joined.mapInPandas(run, schema=PREP_SCHEMA)
 
 
-def estimate_decode_groups(media_tbl: DataFrame, pipe: PipelineConfig) -> int:
-    """Cheap metadata-only estimate of the decode stage's (bucket, salt)
-    group count — the partition-sizing input, NOT a correctness input.
-
-    Uses the media table's stored (height, width): the first-fit bucket of
-    the RAW dims approximates the post-crop bucket (crop shrinks, pad adds
-    16px — the bucket rarely moves), and the salt is the same crc32 the
-    prepro UDF assigns. One narrow 3-column distinct-count vs the decode
-    stage's wall — the stats lookup a warehouse would serve from table
-    metadata at 100 TB (Iceberg partition stats / NDV sketches)."""
+def decode_key(pipe: PipelineConfig):
+    """(bucket, salt) columns of the decode exchange, computed in the JVM
+    from a media row's stored (height, width) and its media_ref: the
+    first-fit bucket of the RAW dims (bucket id ``len(pipe.buckets)`` when
+    none fits, or when the dims are null) and crc32(media_ref) %
+    salt_buckets — the same salt ``preprocess_spans`` assigns. The raw-dims
+    bucket approximates the post-crop one (crop shrinks, pad adds 16px);
+    it only places rows, the UDF batches by actual canvas shape."""
     bucket_id = F.lit(len(pipe.buckets))  # fallback: oversized
     for i in range(len(pipe.buckets) - 1, -1, -1):
         bw, bh = pipe.buckets[i]
         bucket_id = F.when(
             (F.col("width") <= bw) & (F.col("height") <= bh), F.lit(i)
         ).otherwise(bucket_id)
-    return (
-        media_tbl.select(
-            bucket_id.alias("b"),
-            (F.crc32(F.encode("media_ref", "utf-8")) % pipe.salt_buckets).alias(
-                "s"
-            ),
-        )
-        .distinct()
-        .count()
-    )
+    salt = F.crc32(F.encode("media_ref", "utf-8")) % pipe.salt_buckets
+    return bucket_id.alias("bucket"), salt.alias("salt")
+
+
+def estimate_decode_groups(media_tbl: DataFrame, pipe: PipelineConfig) -> int:
+    """Cheap metadata-only count of the media table's distinct
+    ``decode_key`` values — the partition-sizing input, NOT a correctness
+    input. One narrow distinct-count vs the decode stage's wall — the stats
+    lookup a warehouse would serve from table metadata at 100 TB (Iceberg
+    partition stats / NDV sketches)."""
+    return media_tbl.select(*decode_key(pipe)).distinct().count()
 
 
 def fits_some_bucket(pipe: PipelineConfig, height_col, width_col):
-    """Conservative metadata predicate for routing BEFORE preprocessing: a
-    raw (height, width) that fits a bucket after padding is GUARANTEED
-    in-bucket after crop+pad (crop only shrinks, image_ops.get_new_size).
-    Rows failing it take the row-parallel decode path, which handles any
-    shape — including bucketed ones the conservative test missed (the infer
-    UDF same-shape-batches within each partition either way, and the
-    kernels are batch-invariant, so routing never changes output). Routing
-    on stored dims instead of filtering prepro output means the expensive
-    PNG-decode prepro runs ONCE per row — filtering after the UDF made both
-    union branches recompute it over the whole corpus."""
+    """Conservative metadata predicate: a raw (height, width) that fits a
+    bucket after padding is GUARANTEED in-bucket after crop+pad (crop only
+    shrinks, image_ops.get_new_size). Extraction no longer routes on it —
+    ``decode_media`` decodes every shape in one stage — but the layer
+    probes use it to split bucketed from oversized rows."""
     top, left, bottom, right = PAD_SIZE
     cond = F.lit(False)
     for bw, bh in pipe.buckets:
@@ -131,48 +134,58 @@ def fits_some_bucket(pipe: PipelineConfig, height_col, width_col):
     return cond
 
 
-def _make_infer(weights_bc, cfg_dict: dict, budget: int):
-    def infer(pdf):
+def _canvas(png, buckets) -> np.ndarray | None:
+    """Preprocessed canvas of one PNG; None when the image is missing (a
+    dangling media_ref) or undecodable (corrupt or zero-length bytes)."""
+    if png is None:
+        return None
+    try:
+        canvas, _bw, _bh, _ok = image_ops.preprocess(
+            decode_png(bytes(png)), buckets=buckets
+        )
+    except (ValueError, struct.error, zlib.error):
+        return None
+    return canvas
+
+
+def _make_decoder(weights_bc, cfg_dict: dict, budget: int):
+    """decode(pdf, canvases) → a DECODED_SCHEMA frame for one Arrow batch:
+    canvases (2-D uint8 arrays, None for a row without an image, which gets
+    latex NULL) are stacked by shape into chunks of at most ``budget``
+    pixels, so memory is bounded by the batch, not by any group size."""
+
+    def decode(pdf, canvases):
         import pandas as pd
 
         mcfg = ModelConfig.from_dict(cfg_dict)
-        dec = AttentionDecoder(weights_bc.value, mcfg, ID_END)
-        rows_doc, rows_part, rows_off, rows_ref, rows_tex, rows_n = (
-            [], [], [], [], [], []
-        )
-        # within a (bucket, salt) group all canvases share a shape, except the
-        # no-bucket-fits fallback group (bucket = padded size, one shape per
-        # size anyway since bucket_w/bucket_h ARE the canvas dims pre-downsample)
-        for (ch, cw), grp in pdf.groupby(["ch", "cw"], sort=True):
+        weights = weights_bc.value
+        dec = AttentionDecoder(weights, mcfg, ID_END)
+        by_shape: dict[tuple, list[int]] = {}
+        for i, c in enumerate(canvases):
+            if c is not None:
+                by_shape.setdefault(c.shape, []).append(i)
+        latex = [None] * len(canvases)
+        for (ch, cw), idx in sorted(by_shape.items()):
             n_per_batch = max(1, budget // max(ch * cw, 1))
-            for s in range(0, len(grp), n_per_batch):
-                batch = np.stack(
-                    [np.frombuffer(a, dtype=np.uint8).reshape(ch, cw)
-                     for a in grp["canvas"].iloc[s : s + n_per_batch]]
-                )
-                enc = encode(batch, weights_bc.value, mcfg)
+            for s in range(0, len(idx), n_per_batch):
+                chunk = idx[s : s + n_per_batch]
+                enc = encode(np.stack([canvases[i] for i in chunk]), weights, mcfg)
                 if mcfg.decoding == "beam_search":
                     out_ids = beam_decode(dec, enc)[:, 0, :]
                 else:
                     out_ids = dec.greedy_decode(enc)
-                sub = grp.iloc[s : s + n_per_batch]
-                for row_ids, doc_id, part, offset, ref in zip(
-                    out_ids, sub["doc_id"], sub["part"], sub["offset"],
-                    sub["media_ref"],
-                ):
-                    latex = decode_ids_to_latex(row_ids, ID_END, ID_TO_TOK)
-                    rows_doc.append(doc_id)
-                    rows_part.append(int(part))
-                    rows_off.append(int(offset))
-                    rows_ref.append(ref)
-                    rows_tex.append(latex)
-                    rows_n.append(len(latex.split(" ")) if latex else 0)
-        return pd.DataFrame(
-            {"doc_id": rows_doc, "part": rows_part, "offset": rows_off,
-             "media_ref": rows_ref, "latex": rows_tex, "n_tokens": rows_n}
-        )
+                for i, row_ids in zip(chunk, out_ids):
+                    latex[i] = decode_ids_to_latex(row_ids, ID_END, ID_TO_TOK)
+        return pd.DataFrame({
+            "doc_id": pdf["doc_id"].to_numpy(),
+            "part": pdf["part"].to_numpy(),
+            "offset": pdf["offset"].to_numpy(),
+            "media_ref": pdf["media_ref"].to_numpy(),
+            "latex": latex,
+            "n_tokens": [len(t.split(" ")) if t else 0 for t in latex],
+        })
 
-    return infer
+    return decode
 
 
 def decode_partitions(cores: int, n_groups_est: int | None = None) -> int:
@@ -181,19 +194,56 @@ def decode_partitions(cores: int, n_groups_est: int | None = None) -> int:
     ~groups/10 (≈60 partitions for ~600 groups) wins at 8, 16 AND 32
     cores (local[8]: 27.6 s vs 32.3 s with 2×cores; local[16]: 12.0 vs
     15.4; local[32]: 64 ≈ both formulas). Floor of 2× total cores keeps
-    small corpora from under-splitting. LATEX_OCR_DECODE_FACTOR overrides
-    with a core multiple (A/B knob); LATEX_OCR_DECODE_PARTS pins exactly."""
-    import os as _os
-
-    if _os.environ.get("LATEX_OCR_DECODE_PARTS"):
-        return int(_os.environ["LATEX_OCR_DECODE_PARTS"])
-    if _os.environ.get("LATEX_OCR_DECODE_FACTOR"):
-        return max(
-            int(float(_os.environ["LATEX_OCR_DECODE_FACTOR"]) * cores), 16
-        )
+    small corpora from under-splitting."""
     if n_groups_est:
         return max(round(n_groups_est / 10), 2 * cores, 16)
     return max(2 * cores, 16)
+
+
+def decode_media(
+    joined: DataFrame,
+    weights_bc,
+    cfg: ModelConfig,
+    pipe: PipelineConfig,
+    n_groups_est: int | None = None,
+) -> DataFrame:
+    """Media rows (doc_id, part, offset, media_ref, image, height, width) →
+    decoded LaTeX: one hash exchange on ``decode_key``, then one
+    mapInPandas that preprocesses and decodes each Arrow batch. A row whose
+    image is missing or undecodable keeps its span with latex NULL.
+
+    Explicit partition count: AQE's size-based coalescing would fold the
+    exchange of small PNG rows down to a couple of partitions and serialize
+    the UDF, so a user-specified count pins the stage's parallelism."""
+    decode = _make_decoder(weights_bc, cfg.to_dict(), pipe.batch_pixel_budget)
+    buckets = list(pipe.buckets)
+
+    def run(batches):
+        for pdf in batches:
+            yield decode(pdf, [_canvas(png, buckets) for png in pdf["image"]])
+
+    sc = joined.sparkSession.sparkContext
+    n_parts = decode_partitions(sc.defaultParallelism, n_groups_est)
+    return (
+        joined.repartition(n_parts, *decode_key(pipe))
+        .select("doc_id", "part", "offset", "media_ref", "image")
+        .mapInPandas(run, schema=DECODED_SCHEMA)
+    )
+
+
+def _decode_prepped(prepped: DataFrame, weights_bc, cfg, pipe) -> DataFrame:
+    """``preprocess_spans`` output → decoded LaTeX through the same
+    per-batch decoder as ``decode_media``."""
+    decode = _make_decoder(weights_bc, cfg.to_dict(), pipe.batch_pixel_budget)
+
+    def run(batches):
+        for pdf in batches:
+            yield decode(pdf, [
+                np.frombuffer(c, dtype=np.uint8).reshape(h, w)
+                for c, h, w in zip(pdf["canvas"], pdf["ch"], pdf["cw"])
+            ])
+
+    return prepped.mapInPandas(run, schema=DECODED_SCHEMA)
 
 
 def decode_groups(
@@ -203,24 +253,13 @@ def decode_groups(
     pipe: PipelineConfig,
     n_groups_est: int | None = None,
 ) -> DataFrame:
-    """Bucket-grouped batch inference with broadcast weights (the in-bucket
-    path; route inputs with ``fits_some_bucket`` and send the rest to
-    ``decode_rows``)."""
-    infer = _make_infer(weights_bc, cfg.to_dict(), pipe.batch_pixel_budget)
-
-    # Explicit partition count: the canvases are mostly-white uint8 and
-    # compress ~20× in the shuffle, so AQE's size-based coalescing would fold
-    # the decode stage down to a couple of partitions and serialize the UDF
-    # (observed: 2 workers for 314 groups). A user-specified count pins the
-    # stage's parallelism to the cluster; groups still co-locate because the
-    # hash partitioning is on exactly the grouping keys.
+    """Decode of preprocessed rows hash-partitioned on their actual
+    (bucket_w, bucket_h, salt)."""
     sc = prepped.sparkSession.sparkContext
     n_parts = decode_partitions(sc.defaultParallelism, n_groups_est)
-
-    return (
-        prepped.repartition(n_parts, "bucket_w", "bucket_h", "salt")
-        .groupBy("bucket_w", "bucket_h", "salt")
-        .applyInPandas(infer, schema=DECODED_SCHEMA)
+    return _decode_prepped(
+        prepped.repartition(n_parts, "bucket_w", "bucket_h", "salt"),
+        weights_bc, cfg, pipe,
     )
 
 
@@ -230,30 +269,9 @@ def decode_rows(
     cfg: ModelConfig,
     pipe: PipelineConfig,
 ) -> DataFrame:
-    """Row-parallel decode for (possibly) oversized fallback images
-    (no bucket fits, model/utils/image.py:115-123): they are singleton
-    groups with 10-20× the decode cost of a bucketed canvas, and hash
-    placement lets several collide on one partition and become THE stage
-    straggler (observed 8.8 s max task vs 2.4 s p90). They gain nothing
-    from same-shape grouping (each shape is ~unique), so they round-robin
-    instead; the infer kernel still same-shape-batches whatever lands
-    together in a partition."""
-    infer = _make_infer(weights_bc, cfg.to_dict(), pipe.batch_pixel_budget)
+    """Decode of preprocessed rows spread round-robin, one partition per
+    core (at least 8)."""
     sc = prepped.sparkSession.sparkContext
-
-    def infer_rows(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf):
-                yield infer(pdf)
-            else:
-                yield pd.DataFrame(
-                    {"doc_id": [], "part": [], "offset": [], "media_ref": [],
-                     "latex": [], "n_tokens": []}
-                )
-
-    # oversized rows are rare: one partition per core is plenty
-    return prepped.repartition(max(sc.defaultParallelism, 8)).mapInPandas(
-        infer_rows, schema=DECODED_SCHEMA
+    return _decode_prepped(
+        prepped.repartition(max(sc.defaultParallelism, 8)), weights_bc, cfg, pipe
     )

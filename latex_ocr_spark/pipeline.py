@@ -4,12 +4,15 @@ SURVEY.md §3.3, re-expressed Spark-first):
     docs scan (partition-pruned)
       → posexplode(spans)                       # S2 analog
       → route: text spans pass through          # predicate
-      → media spans ⋈ media table on media_ref  # J1/J2 equi join
-      → mapInPandas prepro + bucket assign      # P1,P3,P4,P5 + G1
-      → repartition(bucket, salt)               # the one shuffle that matters
-      → groupBy(bucket, salt).applyInPandas     # M1..M8 + F5 + P7, broadcast weights
+      → media spans ⟕ media table on media_ref  # J1/J2 left equi join
+      → repartition(bucket, salt) in the JVM    # the one shuffle that matters
+      → mapInPandas prepro + batched decode     # P1..P5, M1..M8 + F5 + P7,
+                                                #   broadcast weights
       → unionByName(text spans)                 # set op
       → groupBy(doc_id).sort_array(collect_list)# (doc_id, offset) reassembly
+
+A media span whose media_ref is missing from the media table, or whose
+image does not decode, keeps its place with text NULL.
 """
 
 from __future__ import annotations
@@ -20,12 +23,7 @@ from pyspark.sql import functions as F
 from .config import ModelConfig, PipelineConfig
 from .fixtures.vocab import N_TOK
 from .kernels.weights import init_weights
-from .operators.inference import (
-    decode_groups,
-    decode_rows,
-    fits_some_bucket,
-    preprocess_spans,
-)
+from .operators.inference import decode_media
 from .operators.reassemble import reassemble
 from .sources import read_docs, read_media
 
@@ -77,42 +75,11 @@ def extract_spans_from_docs(
     )
 
     joined = media_spans.join(
-        media_tbl.select("media_ref", "image", "height", "width"), "media_ref"
+        media_tbl.select("media_ref", "image", "height", "width"),
+        "media_ref",
+        "left",
     )
-
-    # Route to the bucketed vs row-parallel decode path on the media table's
-    # STORED dims, before any pixel work: each row is PNG-decoded and
-    # preprocessed exactly once (filtering the prepro UDF's output instead
-    # would make both union branches recompute it over the whole corpus —
-    # measured as a duplicated MapInPandas subtree in the physical plan).
-    fits = fits_some_bucket(pipe, F.col("height"), F.col("width"))
-    base_cols = ("doc_id", "part", "offset", "media_ref", "image")
-
-    # spread the decode+prepro UDF across the cluster: the broadcast join is
-    # narrow, so without this the mapInPandas inherits however few input
-    # splits the (small) spans scan produced. Factor env-tunable for cluster
-    # sizing experiments (LATEX_OCR_PREPRO_FACTOR × defaultParallelism).
-    import os as _os
-
-    # factor 1: one prepro partition per core. 2× was measured to cost ~1 s
-    # of per-task dispatch at local[32] with zero balance benefit (the PNG
-    # decode work is uniform); raise it only for skewed media-size corpora.
-    n_prepro = max(
-        int(float(_os.environ.get("LATEX_OCR_PREPRO_FACTOR", "1"))
-            * spark.sparkContext.defaultParallelism),
-        8,
-    )
-    prepped_bucketed = preprocess_spans(
-        joined.filter(fits).select(*base_cols).repartition(n_prepro), pipe
-    )
-    prepped_rows = preprocess_spans(
-        joined.filter(~fits).select(*base_cols).repartition(8), pipe
-    )
-    # part rides through both UDF schemas, so any corpus's own partition
-    # assignment is preserved (never re-derived from the doc_id string)
-    decoded = decode_groups(
-        prepped_bucketed, weights_bc, cfg, pipe, n_groups_est
-    ).unionByName(decode_rows(prepped_rows, weights_bc, cfg, pipe))
+    decoded = decode_media(joined, weights_bc, cfg, pipe, n_groups_est)
     media_out = decoded.select(
         "doc_id",
         "part",

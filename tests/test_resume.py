@@ -284,3 +284,27 @@ def test_daily_pipeline_new_partitions_mark_downstream_dirty(
         f"downstream stages served stale output: {second}"
     )
     assert spark.read.parquet(f"{out}/budgeted").count() > n_before
+
+
+def test_dedup_lineage_wall_covers_the_stage_call(spark, tmp_path_factory):
+    """dedup_apply runs its connected-components jobs while the survivors
+    frame is built, before the write: the lineage row's wall_s must count
+    them, so it covers (nearly) the whole run_dedup_stage call."""
+    import time
+
+    from latex_ocr_spark.operators.checkpoint import run_dedup_stage
+
+    out = str(tmp_path_factory.mktemp("dedup_wall"))
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [(i, f"{base} copy {i % 3}") for i in range(6)] + [
+        (100 + i, f"unrelated text number {i} about topic {i * 7} and more")
+        for i in range(20)
+    ]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        f"{out}/curated"
+    )
+    t0 = time.time()
+    row = run_dedup_stage(spark, out)
+    wall = time.time() - t0
+    assert row["n_docs"] < len(rows)  # near-dups found: components ran
+    assert row["wall_s"] >= 0.9 * wall, (row["wall_s"], wall)

@@ -3,10 +3,10 @@ repartitions to break skew from documents with many formula images").
 
 The adversarial input at cluster scale is a corpus whose formula images all
 land in ONE shape bucket — e.g. a template site rendering every formula at
-the same size.  Without the salt, groupBy(bucket) would put the whole corpus
-into a single applyInPandas group = one task = one executor core, no matter
-how many executors the cluster has.  The deterministic per-ref salt
-(crc32(media_ref) % salt_buckets, operators/inference.py:76) must spread
+the same size.  Without the salt, partitioning on the bucket would put the
+whole corpus into a single decode partition = one task = one executor core,
+no matter how many executors the cluster has.  The deterministic per-ref salt
+(crc32(media_ref) % salt_buckets, operators/inference.py:decode_key) must spread
 that hot bucket over ~salt_buckets independent groups with balanced sizes.
 """
 
@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from latex_ocr_spark.config import PipelineConfig
 from latex_ocr_spark.fixtures.glyphs import render_formula
 from latex_ocr_spark.fixtures.png import encode_png
-from latex_ocr_spark.operators.inference import preprocess_spans
+from latex_ocr_spark.operators.inference import decode_key, preprocess_spans
 
 N_MEDIA = 256
 
@@ -84,6 +84,22 @@ def test_salt_is_deterministic_content_hash(hot_bucket_groups):
     assert pipe.salt_buckets == 128
     by_ref = {r.media_ref: r.salt for r in ref_salts}
     assert by_ref["m00007.png"] == 127
+
+
+def test_exchange_salt_is_the_udf_salt(spark, hot_bucket_groups):
+    """The decode exchange salts in the JVM (``decode_key``); it must equal
+    zlib.crc32(media_ref) % salt_buckets — the UDF salt pinned above — for
+    every row, non-ASCII refs included (the JVM hashes the UTF-8 bytes)."""
+    pipe, _, ref_salts = hot_bucket_groups
+    refs = [r.media_ref for r in ref_salts] + ["формула-ü.png", "∑-Σ.png"]
+    keyed = spark.createDataFrame(
+        [(r, 50, 200) for r in refs], "media_ref string, height int, width int"
+    ).select("media_ref", *decode_key(pipe))
+    got = {r.media_ref: r.salt for r in keyed.collect()}
+    assert got == {
+        r: zlib.crc32(r.encode("utf-8")) % pipe.salt_buckets for r in refs
+    }
+    assert {r.media_ref: r.salt for r in ref_salts}.items() <= got.items()
 
 
 def test_minhash_band_join_aqe_skew_split(spark):

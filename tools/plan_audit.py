@@ -68,16 +68,15 @@ def main() -> None:
     sections.append(
         (
             "Flagship extraction (`extract_spans`)",
-            "One broadcast join for the media lookup; the bucket/salt "
-            "repartition is the single explicit shuffle; both pandas-UDF "
-            "stages visible (MapInPandas / FlatMapGroupsInPandas).",
+            "One broadcast left join for the media lookup; the JVM-keyed "
+            "(bucket, salt) repartition is the single explicit shuffle; one "
+            "pandas-UDF stage (MapInPandas) preprocesses and decodes.",
             grep_evidence(
                 plan_of(flat),
                 [
                     "BroadcastHashJoin",
                     "Exchange",
                     "MapInPandas",
-                    "FlatMapGroupsInPandas",
                     "PartitionFilters",
                 ],
             ),
@@ -539,7 +538,7 @@ def main() -> None:
     # 10. MEASURED decode-shuffle volume (not just plan shape): run the
     # flagship extraction under a job group and read per-stage shuffle
     # read/write bytes from the status REST API. The (bucket, salt)
-    # repartition must be the dominant exchange, and its bytes/doc is the
+    # repartition must be the only material exchange, and its bytes/doc is the
     # number to extrapolate to 100 TB.
     import json as _json
     import urllib.request
@@ -592,9 +591,9 @@ def main() -> None:
             "Runtime stage metrics from the status REST API (jobGroup-scoped "
             "run at this sf): the (bucket, salt) decode repartition is the "
             "only material exchange; bytes/doc is the scale extrapolation "
-            "basis — shuffle volume grows linearly with corpus size and "
-            "stays well below the raw PNG bytes because canvases are "
-            "bit-packed + RLE'd before the exchange.",
+            "basis — shuffle volume grows linearly with corpus size; the "
+            "exchange runs before any pixel work, so it carries the "
+            "compressed PNG bytes, not decoded rasters.",
             ev,
         )
     )
